@@ -23,23 +23,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import HEADLINE  # noqa: E402  (one frozen list, owned by bench.py)
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-HEADLINE = [
-    "agg_pricing_summary", "join_inner", "join_asof", "window_rank_topk",
-    "agg_rollup", "dedup_exact", "dedup_minhash_lsh_pairs", "dedup_simhash",
-    "ann_bruteforce_topk", "text_token_counts", "text_quality_score",
-    "crawl_extract_text", "crawl_topk_per_host", "dedup_cluster_cc",
-    "graph_pagerank", "text_repetition_filter", "text_tfidf_topk",
-    "ann_ivf_topk", "join_bucketed_colocated", "source_warcish_reader",
-    "embed_kmeans_train", "ann_ivf_indexed", "ann_ivf_trained",
-    "text_dataset_mix", "dedup_span_winnow", "crawl_recrawl_topk",
-    "graph_hits", "embed_standardize", "events_funnel",
-    "ann_ivf_upsert", "embed_pq_codes", "ann_ivfpq_topk",
-    "ann_ivfpq_indexed", "ann_ivfpq_residual", "ann_ivfpq_upsert",
-    "text_bpe_token_counts", "pipeline_curate_mix", "crawl_rank_frontier",
-]
 
 
 def log(msg):

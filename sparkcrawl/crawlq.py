@@ -23,6 +23,7 @@ from .extract import husk_frame
 from .frontier import canonicalize_udf, select_topk_per_host
 from .registry import q, t
 from .robots import allowed_series
+from .scope import session_cached
 
 _HUSK_SCHEMA = T.StructType([
     T.StructField("text", T.StringType()),
@@ -32,17 +33,19 @@ _husk_udf = F.pandas_udf(husk_frame, _HUSK_SCHEMA)
 _robots_udf = F.pandas_udf(allowed_series, T.BooleanType())
 
 
-_DOC_COUNTS: dict = {}
+def doc_count(docs: DataFrame, sf_dir: str) -> int:
+    """|documents| of ``sf_dir``, counted once per session: the
+    renderer's link-target modulus and the graph leaves' iteration
+    constant.  Counts the caller's own scan ``docs``, since a fresh
+    parquet read costs one more (schema-inference) job."""
+    return session_cached(docs.sparkSession, ("doc_count", sf_dir),
+                          docs.count)
 
 
 def _doc_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → pages(url, html) via the deterministic renderer."""
     d = t(spark, sf_dir, "documents")
-    # the renderer needs |documents| (link-target modulus); cache it per
-    # sf_dir so repeated query invocations don't pay an extra count job
-    n = _DOC_COUNTS.get(sf_dir)
-    if n is None:
-        n = _DOC_COUNTS[sf_dir] = d.count()
+    n = doc_count(d, sf_dir)
 
     # the parquet source is a single small file at test SFs, so the scan
     # is 1-2 splits — but every consumer of this frame runs Python work

@@ -22,44 +22,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .registry import q, t
+from .scope import ROWS_PER_SHUFFLE_TASK, capped_conf
 from .textops import _LSH_PAIRS_SQL, dedup_minhash_lsh_pairs
 
 CC_MAX_ITERS = 25  # loud failure beats silent wrong clusters
 
 # Iterative-state shuffle sizing (guide §2.2/§6): the per-iteration state
-# of these algorithms is one row per node — at test SFs that is a few
-# thousand rows, for which the session's shuffle-partition count (sized
-# for corpus-wide scans) schedules ~64 near-empty tasks per stage, and
-# task-scheduling latency dominates every round.  Partitions are derived
-# from the STATE size (target ~20k rows per task), never raised above the
-# session's configured count, so a 10^10-node run keeps its full
-# parallelism and a 5k-node run stops paying 64× scheduling overhead.
-_ITER_ROWS_PER_PART = 20_000
-
-
-def _iter_parts(spark, n_rows: int) -> int:
-    configured = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(configured, n_rows // _ITER_ROWS_PER_PART + 1))
-
-
-class _iter_shuffle:
-    """Scoped spark.sql.shuffle.partitions override for a driver-side
-    iteration loop.  Only jobs RUN inside the scope see it (lazy plans
-    returned to the caller execute under the restored session conf), so
-    every use below materializes its loop state eagerly in-scope."""
-
-    def __init__(self, spark, n_rows: int) -> None:
-        self.spark = spark
-        self.parts = _iter_parts(spark, n_rows)
-
-    def __enter__(self):
-        self._saved = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.parts))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self._saved)
-        return False
+# of these algorithms is one row per node — at test SFs a few thousand
+# rows, for which the session's shuffle-partition count (sized for
+# corpus-wide scans) schedules ~64 near-empty tasks per stage.  Loops run
+# under a state-sized, session-capped count; every use materializes its
+# loop state in-scope (see capped_conf on lazy plans).
+def _iter_scope(spark, n_rows: int):
+    return capped_conf(spark, "spark.sql.shuffle.partitions",
+                       n_rows // ROWS_PER_SHUFFLE_TASK + 1)
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
@@ -93,7 +69,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     # must run at the session's parallelism, not the iteration state's
     edges.count()
     try:
-        with _iter_shuffle(spark, n_nodes):
+        with _iter_scope(spark, n_nodes):
             for _ in range(max_iters):
                 nbr = (edges.join(labels,
                                   edges["src"] == labels["doc_id"])
@@ -210,10 +186,10 @@ def graph_pagerank(spark, sf, iters: int = PR_ITERS):
     scalar agg per round for the dangling mass.  At 10^10 nodes: edges bucketed by src, ranks
     localCheckpointed per round (done here) so plan size stays O(1) in
     the round count.  (Corpus note: 1 + doc_id mod 3 outlinks per node.)"""
-    from .crawlq import _doc_pages, _husk_udf
+    from .crawlq import _doc_pages, _husk_udf, doc_count
 
     docs = t(spark, sf, "documents").select("doc_id")
-    n = docs.count()  # one driver scalar (the iteration constant), not data
+    n = doc_count(docs, sf)  # the iteration constant, not data
     pages = _doc_pages(spark, sf)
     edges = (pages.withColumn("h", _husk_udf("url", "html"))
              .select(F.col("doc_id").alias("src"),
@@ -227,7 +203,7 @@ def graph_pagerank(spark, sf, iters: int = PR_ITERS):
     # state-sized iteration scope (see connected_components)
     edges_deg.count()
     try:
-        with _iter_shuffle(spark, n):
+        with _iter_scope(spark, n):
             ranks = docs.select(F.col("doc_id").alias("v"),
                                 F.lit(1.0 / n).alias("pr"))
             for it in range(iters):
@@ -350,7 +326,7 @@ def graph_hits(spark, sf, iters: int = HITS_ITERS):
     half-round: one edge⋈score join keyed on the node id + one
     map-side-combinable sum + a left join back to the node set;
     localCheckpoint truncates lineage; edges husked ONCE and persisted."""
-    from .crawlq import _doc_pages, _husk_udf
+    from .crawlq import _doc_pages, _husk_udf, doc_count
 
     docs = t(spark, sf, "documents").select("doc_id")
     pages = _doc_pages(spark, sf)
@@ -362,16 +338,15 @@ def graph_hits(spark, sf, iters: int = HITS_ITERS):
                      .cast("long").alias("dst"))
              .persist())
     try:
-        from .crawlq import _DOC_COUNTS
-        n_docs = _DOC_COUNTS.get(sf) or docs.count()
+        n_docs = doc_count(docs, sf)
         edges.count()  # husk chain at session parallelism, pre-scope
         hub = docs.select(F.col("doc_id").alias("v"), F.lit(1.0).alias("h"))
         auth = None
         # checkpoints stay per half-round (auth feeds BOTH the next
         # half-round and the final join — without materialization its
         # subtree would execute twice), but they run under the
-        # state-sized shuffle scope (see _iter_shuffle)
-        with _iter_shuffle(spark, n_docs):
+        # state-sized shuffle scope (see _iter_scope)
+        with _iter_scope(spark, n_docs):
             for _ in range(iters):
                 inc = (edges.join(hub, edges["src"] == hub["v"])
                        .groupBy("dst").agg(F.sum("h").alias("s")))
@@ -443,7 +418,7 @@ def graph_bfs_depth(spark, sf, horizon: int = BFS_HORIZON):
                           F.count("*").alias("n")).collect()[0]
         prev_sum, n_docs = first["s"], first["n"]
         edges.count()  # husk chain at session parallelism, pre-scope
-        with _iter_shuffle(spark, n_docs):
+        with _iter_scope(spark, n_docs):
             for _ in range(horizon):
                 nbr = (edges.join(depth, edges["src"] == depth["doc_id"])
                        .groupBy("dst").agg(F.min(F.col("d") + 1).alias("nd")))

@@ -20,7 +20,7 @@ import os
 import tempfile
 import time
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
+from contextlib import nullcontext
 from functools import reduce
 from typing import Dict, List, Optional
 
@@ -33,18 +33,8 @@ from .frontier import (apply_robots, discover_links, fetch_and_husk,
                        probe_seen, seeds_to_frontier, select_topk_per_host,
                        to_extracted)
 from .schemas import EXTRACTED, FETCHLOG, FRONTIER, METRICS, SEEN_SET
+from .scope import ROWS_PER_SHUFFLE_TASK, capped_conf
 from .storage import IcebergishTable
-
-# micro-batch shuffle sizing: with AQE off (the measured rule for crawl
-# rounds — adaptive re-planning latency dominates small shuffles), every
-# round-internal shuffle gets the session's static partition count, sized
-# for corpus-scale scans.  Rounds know their own state size (pending
-# rows), so each round derives its count from that — floored at n_buckets
-# (keeps the per-bucket python stages fully parallel) and never above the
-# session's configured value (a 10^10-URL pending keeps full cluster
-# parallelism; only near-empty rounds stop paying ~64 empty tasks per
-# stage).
-ROWS_PER_SHUFFLE_TASK = 25_000
 
 
 class CrawlEngine:
@@ -182,17 +172,16 @@ class CrawlEngine:
     def init(self, seed_urls: List[str]) -> None:
         """A1: round 0 — seed ingest, initial pending + seen state."""
         from pyspark.sql import Observation
-        with self._round_shuffle_scope(len(seed_urls)):
+        with self._round_scope(len(seed_urls)):
             seeds = seeds_to_frontier(self.spark, seed_urls, self.n_buckets)
             self.frontier.append(seeds, 0)
             seeds_back = self.frontier.read(self.spark)
             # pending count rides the replace write via observe() —
             # a separate count() was one extra action per init
             obs = Observation()
-            # pending seed-out and seen-filter build both consume the
-            # just-written frontier parquet and target DISTINCT tables —
-            # run them concurrently (the run_round wave pattern; serial
-            # they were ~2.2 s, overlapped ~1.4 s per init)
+            # pending seed-out and seen-filter build both read the
+            # committed frontier and write DISTINCT tables, so they are
+            # independent and run concurrently (the run_round wave pattern)
             with ThreadPoolExecutor(max_workers=2) as pool:
                 waved = [
                     pool.submit(
@@ -322,55 +311,19 @@ class CrawlEngine:
         return reduce(self._filter.merge, blobs) if blobs else None
 
     # ------------------------------------------------------------------ round
-    @contextmanager
-    def _round_shuffle_scope(self, workload_rows: int):
-        """Scoped, state-sized spark.sql.shuffle.partitions for one
-        round's jobs (see ROWS_PER_SHUFFLE_TASK).  Restores the session
-        value on exit — queries running after the engine see their own
-        configuration."""
-        conf = self.spark.conf
-        saved = conf.get("spark.sql.shuffle.partitions")
-        # never ABOVE the session value (a local[2] leg configured at 16
-        # must not be amplified to a large bucket count), never below
-        # n_buckets unless the session itself is configured lower
-        parts = min(int(saved),
-                    max(self.n_buckets,
-                        int(workload_rows) // ROWS_PER_SHUFFLE_TASK + 1))
-        conf.set("spark.sql.shuffle.partitions", str(parts))
-        try:
-            yield
-        finally:
-            conf.set("spark.sql.shuffle.partitions", saved)
-
-    @contextmanager
-    def _pages_scan_scope(self):
-        """Scoped split sizing for the heavy fetch job: the columnar
-        pages snapshot compresses ~25× vs the rendered html, so default
-        split packing would hand the Python-heavy husk stage a handful
-        of multi-thousand-page tasks.  Size splits by snapshot bytes /
-        2×parallelism (never above the session value) so the CPU-bound
-        stage keeps the whole box busy; no-op when pages came in as a
-        regular table (its layout is the caller's business)."""
-        if not self._pages_snapshot_bytes:
-            yield
-            return
-        conf = self.spark.conf
-        saved = conf.get("spark.sql.files.maxPartitionBytes")
-        units = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-        s = saved.strip().lower()
-        saved_bytes = (int(s[:-1]) * units[s[-1]] if s[-1] in units
-                       else int(s))
-        target = max(1 << 20,
-                     min(saved_bytes, self._pages_snapshot_bytes
-                         // (2 * self.spark.sparkContext.defaultParallelism)))
-        conf.set("spark.sql.files.maxPartitionBytes", str(target))
-        try:
-            yield
-        finally:
-            conf.set("spark.sql.files.maxPartitionBytes", saved)
+    def _round_scope(self, rows: int):
+        """State-sized shuffle partitions for one round's jobs.  With AQE
+        off (the measured rule for crawl rounds — adaptive re-planning
+        latency dominates small shuffles) every round-internal shuffle
+        gets the session's static count, sized for corpus-scale scans;
+        a round knows its own state size, floored at n_buckets so the
+        per-bucket python stages stay fully parallel."""
+        return capped_conf(self.spark, "spark.sql.shuffle.partitions",
+                           max(self.n_buckets,
+                               rows // ROWS_PER_SHUFFLE_TASK + 1))
 
     def run_round(self) -> dict:
-        with self._round_shuffle_scope(self._pending_count):
+        with self._round_scope(self._pending_count):
             return self._run_round_inner()
 
     def _run_round_inner(self) -> dict:
@@ -418,7 +371,16 @@ class CrawlEngine:
         else:
             fetched = fetch_and_husk(selected, self.pages,
                                      broadcast_selected=self.fetch_broadcast)
-        with self._pages_scan_scope():
+        # split sizing for the heavy fetch job: the columnar pages snapshot
+        # compresses ~25× vs the rendered html, so default split packing
+        # would hand the Python-heavy husk stage a handful of huge tasks;
+        # a pages table passed in as a regular table keeps its own layout
+        snap = self._pages_snapshot_bytes
+        split_scope = (capped_conf(
+            spark, "spark.sql.files.maxPartitionBytes",
+            max(1 << 20, snap // (2 * spark.sparkContext.defaultParallelism)))
+            if snap else nullcontext())
+        with split_scope:
             ext_sid = self.extracted.append(to_extracted(fetched, r), r)
         # column-pruned INCREMENTAL read-back of just-written files
         # (url_hash/links/n_links only — never text), shared by

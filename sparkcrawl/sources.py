@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .registry import q, t
+from .scope import session_cached
 
 
 # Keyed by uid+pid: deterministic WITHIN a process (reruns overwrite one
@@ -241,18 +242,20 @@ def source_warcish_reader(spark, sf):
 # ------------------------------------------------- bucketed co-located join
 
 _BUCKETS = 8
-_BUCKET_TABLES: dict = {}  # (sf, name) -> catalog table name (session cache)
 
 
 def _bucketed_table(spark, sf: str, name: str, key: str) -> str:
     """Write ``name`` as a bucketed+sorted external table (data in a
     scratch dir, metadata in the session catalog) and return the catalog
-    name.  Bucketing pre-shuffles ONCE at write time; every later join
-    or aggregation keyed on ``key`` then runs exchange-free — the
-    pattern that amortizes the frontier⋈pages join at 100 TB."""
-    cached = _BUCKET_TABLES.get((sf, name))
-    if cached:
-        return cached
+    name — once per session, since the catalog entry dies with it.
+    Bucketing pre-shuffles ONCE at write time; every later join or
+    aggregation keyed on ``key`` then runs exchange-free — the pattern
+    that amortizes the frontier⋈pages join at 100 TB."""
+    return session_cached(spark, ("bucketed", sf, name),
+                          lambda: _write_bucketed(spark, sf, name, key))
+
+
+def _write_bucketed(spark, sf: str, name: str, key: str) -> str:
     # deterministic name: reruns in any process overwrite ONE catalog
     # entry + ONE data dir instead of salting a new copy per process
     sfslug = _sfslug(sf)
@@ -261,7 +264,6 @@ def _bucketed_table(spark, sf: str, name: str, key: str) -> str:
      .bucketBy(_BUCKETS, key).sortBy(key)
      .option("path", _scratch(f"bkt_{name}_{sfslug}"))
      .saveAsTable(tbl))
-    _BUCKET_TABLES[(sf, name)] = tbl
     return tbl
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .registry import q, t
+from .scope import session_cached
 
 # ---------------------------------------------------------------- helpers
 
@@ -1846,9 +1847,6 @@ def embed_standardize(spark, sf):
             .select("vec_id", F.round(znorm, 6).alias("znorm")))
 
 
-_IVF_INDEXES: dict = {}   # (sf, n_cells) -> IcebergishTable (session cache)
-
-
 def ivf_index_table(spark, sf, n_cells: int = IVF_N_CELLS):
     """Build (once per session per sf) the PERSISTED IVF index: the
     cell assignments written as a cell-partitioned Icebergish table —
@@ -1856,11 +1854,13 @@ def ivf_index_table(spark, sf, n_cells: int = IVF_N_CELLS):
     per-query recomputation (the r3 ann_ivf_topk shape).  Partition
     layout is ``cell=N/`` dirs, so a probe's cell list prunes the scan
     to n_probe/n_cells of the data before any row is read."""
+    return session_cached(spark, ("ivf_index", sf, n_cells),
+                          lambda: _build_ivf_index(spark, sf, n_cells))
+
+
+def _build_ivf_index(spark, sf, n_cells):
     from .sources import _scratch, _sfslug
     from .storage import IcebergishTable
-    key = (sf, n_cells)
-    if key in _IVF_INDEXES:
-        return _IVF_INDEXES[key]
     e = t(spark, sf, "embeddings")
     schema = T.StructType([
         T.StructField("vec_id", T.LongType()),
@@ -1873,7 +1873,6 @@ def ivf_index_table(spark, sf, n_cells: int = IVF_N_CELLS):
     tbl.replace(_assign_cells(e, _ivf_centroids(e, n_cells))
                 .select("vec_id", "embedding", F.col("cell").cast("int")
                         .alias("cell")), 0)
-    _IVF_INDEXES[key] = tbl
     return tbl
 
 
@@ -2343,9 +2342,6 @@ def _adc_serve(pq_probe, index):
             .select("query_id", "neighbor_id", "adc", "rk"))
 
 
-_PQ_INDEXES: dict = {}   # sf -> IcebergishTable (session cache)
-
-
 def pq_index_table(spark, sf):
     """Build (once per session per sf) the PERSISTED IVF-PQ index: the
     (vec_id, cell, codes) rows written as a cell-partitioned Icebergish
@@ -2353,10 +2349,13 @@ def pq_index_table(spark, sf):
     a cell id per vector — the raw float vectors live only in the
     (cold) source table, the hot index is ~64× smaller and probes
     prune it by partition before reading a row."""
+    return session_cached(spark, ("pq_index", sf),
+                          lambda: _build_pq_index(spark, sf))
+
+
+def _build_pq_index(spark, sf):
     from .sources import _scratch, _sfslug
     from .storage import IcebergishTable
-    if sf in _PQ_INDEXES:
-        return _PQ_INDEXES[sf]
     e = t(spark, sf, "embeddings")
     cbrow = _pq_cb_row(pq_codebooks(spark, sf))
     schema = T.StructType([
@@ -2370,7 +2369,6 @@ def pq_index_table(spark, sf):
     tbl.replace(_pq_index_df(e, cbrow)
                 .select("vec_id", "codes",
                         F.col("cell").cast("int").alias("cell")), 0)
-    _PQ_INDEXES[sf] = tbl
     return tbl
 
 

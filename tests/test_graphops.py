@@ -54,12 +54,14 @@ def test_cc_raises_on_iteration_cap(spark):
     chain = [(i, i + 1) for i in range(4)]
     edges = spark.createDataFrame(
         chain + [(b, a) for a, b in chain], "src long, dst long")
+    conf = dict(spark.conf.getAll)
     try:
         connected_components(nodes, edges, max_iters=1)
     except RuntimeError as exc:
         assert "converge" in str(exc)
     else:
         raise AssertionError("expected non-convergence to raise")
+    assert dict(spark.conf.getAll) == conf, "raise leaked session conf"
 
 
 def test_pagerank_matches_numpy(spark):

@@ -2,6 +2,11 @@
 must match DuckDB bit-exactly at sf0.001; rows-only queries must run and
 satisfy their structural invariants."""
 
+import json
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 
@@ -66,12 +71,52 @@ def test_entry_smoke(spark):
 
 @pytest.mark.parametrize("name", ORACLED)
 def test_oracle_match(spark, con, name):
+    conf = dict(spark.conf.getAll)
     compare(Q[name](spark, SF), con, O[name], name)
+    assert dict(spark.conf.getAll) == conf, "query leaked session conf"
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_runs(spark, name):
+    conf = dict(spark.conf.getAll)
     assert Q[name](spark, SF).count() >= 0
+    assert dict(spark.conf.getAll) == conf, "query leaked session conf"
+
+
+RESTART_SCRIPT = r"""
+import json, sys
+root, sf, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+sys.path.insert(0, root)
+from tests.conftest import make_spark
+from sparkcrawl.registry import QUERIES, load_all
+load_all()
+counts = []
+for _ in range(2):
+    spark = make_spark("local[2]")
+    spark.sparkContext.setLogLevel("ERROR")
+    counts.append({n: QUERIES[n](spark, sf).count() for n in names})
+    spark.stop()
+print(json.dumps(counts))
+"""
+
+# leaves serving a built artifact: bucketed catalog tables, the IVF and
+# IVF-PQ index tables, the document count behind the page renderer
+RESTART_LEAVES = ["join_bucketed_colocated", "ann_ivf_indexed",
+                  "ann_ivfpq_indexed", "crawl_extract_text"]
+
+
+def test_artifacts_rebuilt_after_session_restart():
+    """Artifacts belong to the session that built them: after
+    spark.stop(), a new session in the SAME process must rebuild them
+    (a catalog table died with its session) and return the same rows.
+    Own subprocess, since the test session must stay up."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", RESTART_SCRIPT, root, SF, *RESTART_LEAVES],
+        capture_output=True, text=True, timeout=900)
+    assert out.returncode == 0, out.stderr[-3000:]
+    first, second = json.loads(out.stdout.strip().splitlines()[-1])
+    assert first == second
 
 
 def test_lsh_recall_vs_bruteforce(spark):

@@ -1,6 +1,7 @@
 """A18 checkpoint/resume (SURVEY §5.5): kill after round k (with partial
 round-k+1 garbage), resume, final state identical to an uninterrupted run."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkcrawl import corpus
@@ -60,3 +61,22 @@ def test_resume_without_checkpoint_raises(spark, tmp_path):
     except FileNotFoundError:
         raised = True
     assert raised
+
+
+@pytest.mark.parametrize("max_split", [None, "128mb"])
+def test_round_restores_session_conf(spark, tmp_path, max_split):
+    """init + one round leave spark.conf exactly as found — a key the
+    session never set stays unset — and any size form Spark accepts for
+    the split-size key ("128mb") is read, not choked on."""
+    key = "spark.sql.files.maxPartitionBytes"
+    if max_split:
+        spark.conf.set(key, max_split)
+    try:
+        conf = dict(spark.conf.getAll)
+        eng = _mk(spark, tmp_path / "d")
+        eng.init(corpus.seed_urls(N, 5))
+        assert eng.run_round()["urls_fetched"] > 0
+        assert dict(spark.conf.getAll) == conf
+    finally:
+        if max_split:
+            spark.conf.unset(key)
