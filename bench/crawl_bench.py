@@ -98,8 +98,7 @@ def main() -> None:
                       budget_per_host=args.budget,
                       n_buckets=args.n_buckets,
                       salt_buckets=16,
-                      bloom_capacity_per_bucket=max(1 << 16, args.n // 8),
-                      fetch_broadcast=True)
+                      bloom_capacity_per_bucket=max(1 << 16, args.n // 8))
     t0 = time.time()
     eng.init(seeds)
     t_init = time.time() - t0

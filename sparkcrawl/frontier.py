@@ -118,27 +118,21 @@ def select_topk_per_host(allowed: DataFrame, budget: int,
     )
 
 
-def fetch_and_husk(selected: DataFrame, pages: DataFrame,
-                   broadcast_selected: bool = False) -> DataFrame:
+def fetch_and_husk(selected: DataFrame, pages: DataFrame) -> DataFrame:
     """A10 fetch (the pages table IS the web in-sandbox: join on canonical
     url) + A11-A15 husk via one vectorized Arrow UDF.
 
     Returns selected columns + (fetched:boolean, text, links, lang).
 
     Join strategy (the scale-critical choice — the pages side carries the
-    html payload, which must NEVER be shuffled):
-
-    * ``broadcast_selected=True``: broadcast-hash INNER join with the
-      (politeness-bounded) selected set as build side and the pages scan
-      streamed map-side — zero shuffle of html, one pages scan, and
-      only hit rows cross the Arrow boundary.  Fetch misses (dead
-      links) are NOT in the output; the engine derives them as
-      selected ∖ extracted from the written table (a broadcast outer
-      join is impossible here: Spark cannot broadcast the preserved
-      side, and the fallback sort-merge join would shuffle the html).
-    * ``False``: plain left join (misses included as null-html rows) —
-      Catalyst/AQE picks the strategy; at cluster scale pair it with a
-      pages table bucketed by url so only the selected side shuffles.
+    html payload, which must NEVER be shuffled): a broadcast-hash INNER
+    join with the (politeness-bounded) selected set as build side and
+    the pages scan streamed map-side — zero shuffle of html, one pages
+    scan, and only hit rows cross the Arrow boundary.  Fetch misses
+    (dead links) are NOT in the output; the engine derives them as
+    selected ∖ extracted from the written table (a broadcast outer join
+    is impossible here: Spark cannot broadcast the preserved side, and
+    the fallback sort-merge join would shuffle the html).
 
     The real-web deployment path swaps this join for an async-HTTP
     ``mapInPandas`` with the same output schema.
@@ -148,12 +142,8 @@ def fetch_and_husk(selected: DataFrame, pages: DataFrame,
         F.col("html").alias("_html"),
         F.col("lang").alias("lang"),
     )
-    if broadcast_selected:
-        joined = pg.join(F.broadcast(selected),
-                         selected["url_canon"] == pg["_page_url"], "inner")
-    else:
-        joined = selected.join(
-            pg, selected["url_canon"] == pg["_page_url"], "left")
+    joined = pg.join(F.broadcast(selected),
+                     selected["url_canon"] == pg["_page_url"], "inner")
 
     husk_udf = F.pandas_udf(husk_frame, _HUSK_SCHEMA)
     return (

@@ -49,7 +49,6 @@ class CrawlEngine:
         salt_buckets: int = 8,
         bloom_capacity_per_bucket: int = 1 << 17,
         bloom_fpp: float = 0.01,
-        fetch_broadcast: bool = True,
         seen_filter: str = "bloom",
         compact_every: int = 0,
         fetcher: str = "join",
@@ -82,7 +81,6 @@ class CrawlEngine:
         self.salt_buckets = salt_buckets
         self.bloom_capacity = bloom_capacity_per_bucket
         self.bloom_fpp = bloom_fpp
-        self.fetch_broadcast = fetch_broadcast
         # A10 backend: "join" = the sandbox pages-table join;
         # "http" = real wire fetch (fetch_http.fetch_and_husk_http) —
         # same output contract, so every downstream stage is shared.
@@ -369,8 +367,7 @@ class CrawlEngine:
             fetched = fetch_and_husk_http(
                 with_robots_delay(selected, self.robots), **self.http_opts)
         else:
-            fetched = fetch_and_husk(selected, self.pages,
-                                     broadcast_selected=self.fetch_broadcast)
+            fetched = fetch_and_husk(selected, self.pages)
         # split sizing for the heavy fetch job: the columnar pages snapshot
         # compresses ~25× vs the rendered html, so default split packing
         # would hand the Python-heavy husk stage a handful of huge tasks;

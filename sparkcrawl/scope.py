@@ -53,8 +53,13 @@ def capped_conf(spark: SparkSession, key: str, want: int):
 def session_cached(spark: SparkSession, key: Tuple, build: Callable[[], T]) -> T:
     """``build()`` once per (session, ``key``): an artifact built by one
     SparkSession (a catalog table, an index, a count) is never handed to
-    a later session of the same process."""
-    k = (spark.sparkContext.applicationId, *key)
+    a later session of the same process.  A process runs one
+    SparkContext at a time, so entries of any other application belong
+    to a stopped session and are dropped."""
+    app = spark.sparkContext.applicationId
+    for stale in [k for k in _ARTIFACTS if k[0] != app]:
+        del _ARTIFACTS[stale]
+    k = (app, *key)
     if k not in _ARTIFACTS:
         _ARTIFACTS[k] = build()
     return _ARTIFACTS[k]

@@ -2539,7 +2539,7 @@ def ann_ivfpq_residual(spark, sf, n_probe: int = IVF_N_PROBE):
 
 # Frozen subword vocabulary (multi-char pieces; every single char is an
 # implicit fallback piece).  A real deployment loads a trained 32k-100k
-# BPE/wordpiece vocab into the SAME broadcast-row model slot; the greedy
+# BPE/wordpiece vocab into the SAME kernel closure; the greedy
 # longest-match serve loop below is exactly wordpiece inference.
 BPE_VOCAB = (
     "the an in er or at on st ar le re me ta sc ow am ch "
@@ -2550,72 +2550,34 @@ BPE_VOCAB = (
 BPE_MAXW = 16   # ≥ the corpus's max word length (oracle position bound)
 
 
-_BPE_MAXP = max(len(p) for p in BPE_VOCAB)  # longest piece (probe bound)
+def _bpe_ntok_udf(vocab=BPE_VOCAB):
+    """Per-text token count under greedy longest-match (wordpiece
+    inference) as one Arrow-batched scalar pandas UDF.  The vocab rides
+    in the closure as {piece length: set of pieces}: each position
+    costs at most one hashed probe per piece length, flat in vocab size
+    (pinned by test_bpe_vocab_scale_sublinear).  Words are the " "
+    split of F.split; a null text counts null."""
+    by_len = {}
+    for p in vocab:
+        if len(p) > 1:
+            by_len.setdefault(len(p), set()).add(p)
+    lens = sorted(by_len, reverse=True)
 
+    def ntok(text):
+        n = 0
+        for w in text.split(" "):
+            pos = 0
+            while pos < len(w):
+                pos += next((L for L in lens
+                             if w[pos:pos + L] in by_len[L]), 1)
+                n += 1
+        return n
 
-def _bpe_vocab_row(spark, vocab=BPE_VOCAB):
-    """The tokenizer model on ONE broadcast row as a BUCKETED map
-    (first char + piece length → sorted piece array) — the _centroid_row
-    pattern: never literal arrays (a real vocab is 10⁴–10⁵ pieces;
-    codegen literals would blow up), never a driver rebuild.  Why this
-    shape: Catalyst has no hashed in-row lookup (MapType element_at is a
-    linear key scan, and per-element HOF lambdas evaluate interpreted),
-    so the fast primitives are the NATIVE linear loops GetMapValue and
-    array_contains.  Bucketing bounds the map at ≤ alphabet × maxp
-    entries and each bucket at the pieces sharing (first char, length) —
-    both independent of total vocab size."""
-    assert vocab, "empty BPE vocab"
-    vdf = spark.createDataFrame([(p,) for p in vocab], "p string")
-    buckets = (vdf.select(
-        F.concat(F.substring("p", 1, 1), F.length("p").cast("string"))
-        .alias("k"), "p")
-        .groupBy("k").agg(F.sort_array(F.collect_list("p")).alias("ps")))
-    return F.broadcast(buckets.agg(
-        F.map_from_entries(F.sort_array(F.collect_list(
-            F.struct("k", "ps")))).alias("_vbkt")))
+    @F.pandas_udf("long")
+    def n_bpe_tokens(text: pd.Series) -> pd.Series:
+        return text.map(ntok, na_action="ignore").astype("Int64")
 
-
-def _bpe_word_ntok(w, maxp: int = _BPE_MAXP):
-    """Token count of one word under greedy longest-match against the
-    broadcast ``_vbkt`` bucketed vocab: fold over character positions
-    carrying (pos, n) state; each step consumes the LONGEST matching
-    piece (fallback: one char).  Runs entirely in-row; per position the
-    match probes ≤ maxp−1 buckets (native map-key scan bounded by
-    alphabet × maxp, then array_contains over the handful of pieces
-    sharing first char AND length) — effectively flat in vocab size
-    (the r5 version scanned the whole vocab array per position: fine at
-    the 42-piece demo vocab, a ~10³× constant at a real 10⁴–10⁵-piece
-    one; near-flat cost is pinned by test_bpe_vocab_scale_sublinear)."""
-    maxp = max(2, maxp)
-
-    def step(acc, _):
-        # candidate piece lengths at this position: L matches iff the
-        # L-char substring is in its (first char, L) bucket (guard keeps
-        # substr exactly L chars — a truncated tail must not match a
-        # shorter piece).  Python-level L keeps the bucket-key length
-        # suffix a literal.
-        cands = F.array(*[
-            F.when(
-                (acc["pos"] + F.lit(L) <= F.length(w) + 1)
-                & F.coalesce(
-                    F.array_contains(
-                        F.element_at(
-                            F.col("_vbkt"),
-                            F.concat(w.substr(acc["pos"], F.lit(1)),
-                                     F.lit(str(L)))),
-                        w.substr(acc["pos"], F.lit(L))),
-                    F.lit(False)),
-                F.lit(L)).otherwise(F.lit(1))
-            for L in range(2, maxp + 1)])
-        best = F.array_max(cands)
-        return (F.when(acc["pos"] > F.length(w), acc)
-                .otherwise(F.struct((acc["pos"] + best).alias("pos"),
-                                    (acc["n"] + 1).alias("n"))))
-
-    return F.when(F.length(w) == 0, F.lit(0)).otherwise(
-        F.aggregate(F.sequence(F.lit(1), F.length(w)),
-                    F.struct(F.lit(1).alias("pos"), F.lit(0).alias("n")),
-                    step, lambda acc: acc["n"]))
+    return n_bpe_tokens
 
 
 _BPE_VALUES = ", ".join(f"('{p}')" for p in BPE_VOCAB)
@@ -2651,26 +2613,19 @@ def text_bpe_token_counts(spark, sf):
     budgets in BPE/wordpiece tokens, and whitespace word counts
     (text_token_counts) systematically undercount; this op makes the
     budget tokenizer-true.  Greedy longest-match per word (wordpiece
-    inference) against the broadcast vocab row, computed ENTIRELY
-    in-row: fold over char positions, nested HOFs, zero shuffle except
-    the final per-doc rollup — the corpus is scanned once and no token
-    row ever materializes.  The oracle re-derives the identical
-    segmentation via a recursive position-walk CTE (best-match table +
-    join-driven recursion, aggregation-free in the recursive term).
-    At 100 TB: model = one broadcast row (swap in a real trained
-    vocab), scan = narrow map; the per-position match cost is O(max
-    piece length) map probes, independent of vocab size (see
-    _bpe_word_ntok), so a 10⁵-piece vocab changes neither the shape nor
-    the constant."""
+    inference) runs in one Arrow-batched scalar pandas UDF with the
+    vocab in its closure (_bpe_ntok_udf): a narrow map over the corpus
+    scan, no shuffle, no join, and no token row ever materializes.
+    n_words stays a native size(split).  The oracle re-derives the
+    identical segmentation via a recursive position-walk CTE
+    (best-match table + join-driven recursion, aggregation-free in the
+    recursive term).  At 100 TB: swap in a real trained vocab — the
+    per-position match cost is one set probe per piece length, so a
+    10⁵-piece vocab changes neither the shape nor the constant."""
     d = t(spark, sf, "documents").select("doc_id", "text")
-    words = F.split("text", " ")
-    total = F.aggregate(
-        words, F.lit(0).cast("bigint"),
-        lambda acc, w: acc + _bpe_word_ntok(w).cast("bigint"))
-    return (d.crossJoin(_bpe_vocab_row(spark))
-            .select("doc_id",
-                    F.size(words).cast("bigint").alias("n_words"),
-                    total.alias("n_bpe_tokens")))
+    n_words = F.size(F.split("text", " ")).cast("bigint")
+    return d.select("doc_id", n_words.alias("n_words"),
+                    _bpe_ntok_udf()("text").alias("n_bpe_tokens"))
 
 
 # =========================================================================

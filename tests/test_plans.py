@@ -44,7 +44,7 @@ def test_fetch_join_never_shuffles_html(spark):
     pages = corpus.pages_df(spark, 200)
     seeds = seeds_to_frontier(spark, [corpus.page_url(i) for i in range(20)], 8)
     selected = select_topk_per_host(seeds, 5, 4)
-    plan = plan_of(fetch_and_husk(selected, pages, broadcast_selected=True))
+    plan = plan_of(fetch_and_husk(selected, pages))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     # any exchange in the plan must be on the selected side (pre-window),

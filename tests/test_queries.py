@@ -89,6 +89,7 @@ root, sf, names = sys.argv[1], sys.argv[2], sys.argv[3:]
 sys.path.insert(0, root)
 from tests.conftest import make_spark
 from sparkcrawl.registry import QUERIES, load_all
+from sparkcrawl.scope import _ARTIFACTS
 load_all()
 counts = []
 for _ in range(2):
@@ -96,7 +97,7 @@ for _ in range(2):
     spark.sparkContext.setLogLevel("ERROR")
     counts.append({n: QUERIES[n](spark, sf).count() for n in names})
     spark.stop()
-print(json.dumps(counts))
+print(json.dumps([counts, sorted({k[0] for k in _ARTIFACTS})]))
 """
 
 # leaves serving a built artifact: bucketed catalog tables, the IVF and
@@ -108,15 +109,17 @@ RESTART_LEAVES = ["join_bucketed_colocated", "ann_ivf_indexed",
 def test_artifacts_rebuilt_after_session_restart():
     """Artifacts belong to the session that built them: after
     spark.stop(), a new session in the SAME process must rebuild them
-    (a catalog table died with its session) and return the same rows.
+    (a catalog table died with its session) and return the same rows;
+    the stopped session's entries are gone from the artifact cache.
     Own subprocess, since the test session must stay up."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
         [sys.executable, "-c", RESTART_SCRIPT, root, SF, *RESTART_LEAVES],
         capture_output=True, text=True, timeout=900)
     assert out.returncode == 0, out.stderr[-3000:]
-    first, second = json.loads(out.stdout.strip().splitlines()[-1])
+    (first, second), apps = json.loads(out.stdout.strip().splitlines()[-1])
     assert first == second
+    assert len(apps) == 1, apps
 
 
 def test_lsh_recall_vs_bruteforce(spark):
@@ -225,15 +228,13 @@ def test_approx_percentile_close(spark, con):
 
 
 def test_bpe_matches_pure_python_reference(spark):
-    """Property test: the in-row greedy fold must agree with a direct
-    pure-Python greedy longest-match tokenizer on 300 pseudorandom
-    words — vocab-piece concatenations (worst case for longest-match
-    boundaries) and random letter strings."""
+    """Property test: the greedy matcher kernel must agree with a
+    direct pure-Python greedy longest-match tokenizer on 300
+    pseudorandom one-word texts — vocab-piece concatenations (worst
+    case for longest-match boundaries) and random letter strings."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from sparkcrawl.textops import BPE_VOCAB, _bpe_vocab_row, _bpe_word_ntok
+    from sparkcrawl.textops import BPE_VOCAB, _bpe_ntok_udf
 
     def py_ntok(w):
         pos, n = 0, 0
@@ -257,8 +258,7 @@ def test_bpe_matches_pure_python_reference(spark):
                                  for _ in range(rng.randint(1, 12))))
     df = spark.createDataFrame(list(enumerate(words)), "i long, w string")
     got = {r["i"]: r["n"] for r in
-           df.crossJoin(_bpe_vocab_row(spark))
-           .select("i", _bpe_word_ntok(F.col("w")).alias("n")).collect()}
+           df.select("i", _bpe_ntok_udf()("w").alias("n")).collect()}
     bad = [(words[i], got[i], py_ntok(words[i]))
            for i in range(len(words)) if got[i] != py_ntok(words[i])]
     assert not bad, bad[:5]
@@ -314,24 +314,22 @@ def test_ivf_trained_recall_and_assignment_quality(spark):
 def test_bpe_greedy_segmentation_known_words(spark):
     """Frozen-vocab greedy longest-match must produce the hand-derived
     segmentations: whole-vocab words are 1 token, 'windo'+'w' is 2,
-    out-of-vocab letters fall back to singles, and the longest match
-    wins at every position."""
-    from pyspark.sql import functions as F
-
-    from sparkcrawl.textops import _bpe_vocab_row, _bpe_word_ntok
+    out-of-vocab letters fall back to singles, the longest match wins
+    at every position, and a null text counts null."""
+    from sparkcrawl.textops import _bpe_ntok_udf
 
     df = spark.createDataFrame(
         [("stream",), ("window",), ("xyz",), ("orders",), ("tab",),
-         ("",)], "w string")
+         ("",), (None,)], "w string")
     got = {r["w"]: r["n"] for r in
-           df.crossJoin(_bpe_vocab_row(spark))
-           .select("w", _bpe_word_ntok(F.col("w")).alias("n")).collect()}
+           df.select("w", _bpe_ntok_udf()("w").alias("n")).collect()}
     assert got == {"stream": 1,   # 'stream' ∈ vocab beats 'st'+'ream'
                    "window": 2,   # 'windo' + fallback 'w'
                    "xyz": 3,      # all single-char fallbacks
                    "orders": 2,   # 'order' + 's'
                    "tab": 2,      # 'ta' + 'b'
-                   "": 0}, got
+                   "": 0,
+                   None: None}, got
 
 
 def test_bpe_oracle_position_bound_holds(spark):
@@ -353,20 +351,18 @@ def test_bpe_oracle_position_bound_holds(spark):
 
 
 def test_bpe_vocab_scale_sublinear(spark):
-    """The greedy matcher probes a piece MAP with ≤ max-piece-length
-    lookups per position, so per-doc cost must be near-FLAT in vocab
-    size (the r5 array scan was linear: a 119× bigger vocab meant ~119×
-    the innermost loop).  Run the same corpus fold under the 42-piece
-    demo vocab and a 5,000-piece synthetic vocab and bound the
-    wall-time ratio; also re-verify greedy correctness against the
-    pure-Python reference under the big vocab."""
+    """The greedy matcher probes one piece SET per piece length at
+    each position, so per-doc cost must be near-FLAT in vocab size (the
+    r5 array scan was linear: a 114× bigger vocab meant ~114× the
+    innermost loop).  Run the same corpus pass under the 44-piece demo
+    vocab and a 5,000-piece synthetic vocab and bound the wall-time
+    ratio; also re-verify greedy correctness against the pure-Python
+    reference under the big vocab."""
     import random
     import time
 
-    from pyspark.sql import functions as F
-
     from sparkcrawl.registry import t as _t
-    from sparkcrawl.textops import BPE_VOCAB, _bpe_vocab_row, _bpe_word_ntok
+    from sparkcrawl.textops import BPE_VOCAB, _bpe_ntok_udf
 
     rng = random.Random(9)
     big = set(BPE_VOCAB)
@@ -376,24 +372,19 @@ def test_bpe_vocab_scale_sublinear(spark):
     big = sorted(big)
     maxp_big = max(len(p) for p in big)
 
-    def corpus_fold(vocab, maxp):
-        d = _t(spark, SF, "documents").select("doc_id", "text")
-        words = F.split("text", " ")
-        total = F.aggregate(
-            words, F.lit(0).cast("bigint"),
-            lambda acc, w: acc + _bpe_word_ntok(w, maxp).cast("bigint"))
-        (d.crossJoin(_bpe_vocab_row(spark, vocab))
-         .select("doc_id", total.alias("n"))
+    def corpus_pass(vocab):
+        (_t(spark, SF, "documents")
+         .select("doc_id", _bpe_ntok_udf(vocab)("text").alias("n"))
          .write.format("noop").mode("overwrite").save())
 
-    corpus_fold(BPE_VOCAB, max(len(p) for p in BPE_VOCAB))  # warm
+    corpus_pass(BPE_VOCAB)  # warm
     t0 = time.time()
-    corpus_fold(BPE_VOCAB, max(len(p) for p in BPE_VOCAB))
+    corpus_pass(BPE_VOCAB)
     t_small = time.time() - t0
     t0 = time.time()
-    corpus_fold(big, maxp_big)
+    corpus_pass(big)
     t_big = time.time() - t0
-    # 119× the vocab; allow generous noise+maxp headroom, never ~119×
+    # 114× the vocab; allow generous noise+maxp headroom, never ~114×
     assert t_big <= 3.0 * t_small + 1.0, (t_small, t_big)
 
     # correctness under the big vocab (greedy longest-match reference)
@@ -416,9 +407,7 @@ def test_bpe_vocab_scale_sublinear(spark):
              for _ in range(150)] + [big[7] + big[4242] + "q", ""]
     df = spark.createDataFrame(list(enumerate(words)), "i long, w string")
     got = {r["i"]: r["n"] for r in
-           df.crossJoin(_bpe_vocab_row(spark, big))
-           .select("i", _bpe_word_ntok(F.col("w"), maxp_big).alias("n"))
-           .collect()}
+           df.select("i", _bpe_ntok_udf(big)("w").alias("n")).collect()}
     bad = [(words[i], got[i], py_ntok(words[i]))
            for i in range(len(words)) if got[i] != py_ntok(words[i])]
     assert not bad, bad[:5]
