@@ -200,39 +200,30 @@ def discover_links(extracted: DataFrame, round_no: int, n_buckets: int) -> DataF
     )
 
 
-def probe_seen(candidates: DataFrame, frontier: DataFrame,
-               seen_df: Optional[DataFrame], spark: SparkSession,
-               contains_fn=None) -> DataFrame:
-    """A5 dedupe, exact-with-Bloom-fast-path (SURVEY §2.A A5):
-
-    * Bloom NEGATIVE ⇒ definitely unseen ⇒ admitted with NO join.
-    * Bloom POSITIVE ⇒ maybe seen ⇒ exact left_anti join against the
-      authoritative frontier (false positives survive; true duplicates
-      drop).  At 10^10 scale the anti-join therefore touches only the
-      tiny maybe-seen slice instead of every discovered link.
+def probe_seen(candidates: DataFrame, seen_df: DataFrame,
+               contains_fn=bloom_mod.contains_many) -> DataFrame:
+    """A5 seen probe (SURVEY §2.A A5): the candidates, each flagged
+    ``maybe_seen`` by its bucket's filter.  ``drop_seen`` then settles
+    the flag exactly.
 
     ``seen_df`` is the per-bucket filter table (SEEN_SET schema:
-    partition_id, bloom, n_items, …) or None for the pure anti-join
-    path.  Candidates meet their bucket's blob via a CO-PARTITIONED
-    cogroup on host_bucket — each executor task loads only the blobs of
-    the buckets it processes.  (The round-1 design broadcast a driver
-    dict of ALL blobs to every executor: ~12 GB at the 10^10-URL design
-    point, a driver OOM + broadcast storm.  Nothing here scales with
-    the number of buckets on any single node.)
+    partition_id, bloom, n_items, …).  Candidates meet their bucket's
+    blob via a CO-PARTITIONED cogroup on host_bucket — each executor
+    task loads only the blobs of the buckets it processes.  (The
+    round-1 design broadcast a driver dict of ALL blobs to every
+    executor: ~12 GB at the 10^10-URL design point, a driver OOM +
+    broadcast storm.  Nothing here scales with the number of buckets on
+    any single node.)  ``contains_fn`` is called once per bucket that
+    has a filter.
 
-    A bucket whose filter saturated (n_items < 0 marker, cuckoo backend
-    overflow) degrades gracefully: every candidate in it is treated as
-    maybe-seen and takes the exact anti-join path.
+    A bucket with no filter row was never seen (flag False).  A bucket
+    whose filter saturated (n_items < 0 marker, cuckoo backend overflow)
+    degrades gracefully: every candidate in it is flagged maybe-seen and
+    takes the exact anti-join path.
+
+    The result feeds both branches of ``drop_seen``; a caller that
+    persists it runs the Python probe once.
     """
-    # anti-join needs no distinct on the build side — a duplicate-free
-    # probe result either way, and distinct would re-shuffle the whole
-    # frontier every round.
-    if seen_df is None:
-        return candidates.join(frontier.select("url_hash"),
-                               "url_hash", "left_anti")
-    if contains_fn is None:
-        contains_fn = bloom_mod.contains_many
-
     blobs = seen_df.select(
         F.col("partition_id").alias("host_bucket"), "bloom", "n_items")
     schema = T.StructType(candidates.schema.fields +
@@ -258,9 +249,24 @@ def probe_seen(candidates: DataFrame, frontier: DataFrame,
                 blob, cand_pdf["url_hash"].to_numpy())
         return out
 
-    flagged = (candidates.groupBy("host_bucket")
-               .cogroup(blobs.groupBy("host_bucket"))
-               .applyInPandas(lambda key, c, b: probe(c, b), schema))
+    return (candidates.groupBy("host_bucket")
+            .cogroup(blobs.groupBy("host_bucket"))
+            .applyInPandas(lambda key, c, b: probe(c, b), schema))
+
+
+def drop_seen(flagged: DataFrame, frontier: DataFrame) -> DataFrame:
+    """A5 dedupe, exact-with-filter-fast-path, over ``probe_seen``'s
+    output:
+
+    * filter NEGATIVE ⇒ definitely unseen ⇒ admitted with NO join.
+    * filter POSITIVE ⇒ maybe seen ⇒ exact left_anti join against the
+      authoritative frontier (false positives survive; true duplicates
+      drop).  At 10^10 scale the anti-join therefore touches only the
+      tiny maybe-seen slice instead of every discovered link.
+    """
+    # anti-join needs no distinct on the build side — a duplicate-free
+    # probe result either way, and distinct would re-shuffle the whole
+    # frontier every round.
     fresh = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     verified = maybe.join(frontier.select("url_hash"), "url_hash", "left_anti")

@@ -25,13 +25,13 @@ from functools import reduce
 from typing import Dict, List, Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import bloom as bloom_mod
-from .frontier import (apply_robots, discover_links, fetch_and_husk,
-                       probe_seen, seeds_to_frontier, select_topk_per_host,
-                       to_extracted)
+from .frontier import (apply_robots, discover_links, drop_seen,
+                       fetch_and_husk, probe_seen, seeds_to_frontier,
+                       select_topk_per_host, to_extracted)
 from .schemas import EXTRACTED, FETCHLOG, FRONTIER, METRICS, SEEN_SET
 from .scope import ROWS_PER_SHUFFLE_TASK, capped_conf
 from .storage import IcebergishTable
@@ -53,7 +53,6 @@ class CrawlEngine:
         compact_every: int = 0,
         fetcher: str = "join",
         http_opts: Optional[dict] = None,
-        rebuild_on_saturation: bool = True,
     ) -> None:
         self.spark = spark
         self.workdir = workdir
@@ -104,12 +103,6 @@ class CrawlEngine:
         # 0 disables.  Runs before the checkpoint so resume pins the
         # compacted snapshot.
         self.compact_every = compact_every
-        # saturation recovery: a bucket whose cuckoo filter overflows is
-        # first degraded to the exact anti-join (never wrong), then —
-        # when this flag is on — rebuilt at 2× geometry from the
-        # authoritative frontier keys so it recovers its fast path
-        # instead of staying anti-join-only forever.
-        self.rebuild_on_saturation = rebuild_on_saturation
         self._pending_count = 0
 
         j = lambda name: os.path.join(workdir, name)  # noqa: E731
@@ -169,7 +162,6 @@ class CrawlEngine:
     # ------------------------------------------------------------------ init
     def init(self, seed_urls: List[str]) -> None:
         """A1: round 0 — seed ingest, initial pending + seen state."""
-        from pyspark.sql import Observation
         with self._round_scope(len(seed_urls)):
             seeds = seeds_to_frontier(self.spark, seed_urls, self.n_buckets)
             self.frontier.append(seeds, 0)
@@ -250,10 +242,12 @@ class CrawlEngine:
                   .cogroup(prev.groupBy("host_bucket"))
                   .applyInPandas(build_merge, SEEN_SET))
         self.seen.replace(merged, round_no)
-        # only the cuckoo backend can overflow (bloom fpp degrades instead
-        # of raising), so the bloom path skips the saturation-scan job —
-        # it would be one wasted read+collect per round
-        if self.rebuild_on_saturation and self.seen_filter == "cuckoo":
+        # saturation recovery: an overflowed bucket, degraded to the exact
+        # anti-join above, is rebuilt at 2× geometry so it recovers its
+        # fast path.  Only the cuckoo backend can overflow (bloom fpp
+        # degrades instead of raising), so the bloom path skips the
+        # saturation-scan job — one wasted read+collect per round.
+        if self.seen_filter == "cuckoo":
             self._rebuild_saturated(round_no)
 
     def _rebuild_saturated(self, round_no: int) -> None:
@@ -329,8 +323,9 @@ class CrawlEngine:
 
         Job discipline (the per-round overhead + memory budget):
 
-        * LIGHT DataFrames (pending/selected/candidates — urls + metadata,
-          no payloads) are persisted and shared by their consumers.
+        * LIGHT DataFrames (pending/selected/probe-flagged candidates —
+          urls + metadata, no payloads) are persisted and shared by their
+          consumers, so no Python stage runs twice.
         * The HEAVY path (html → husk UDF → text/links) is materialized
           exactly ONCE, by the extracted-table write; everything that
           needs its results (fetchlog status, link discovery, metrics)
@@ -418,20 +413,20 @@ class CrawlEngine:
                 F.lit(0).cast("int").alias("http_status"),
                 F.lit(0).cast("int").alias("attempts")))
         )
-        # discover → dedupe (bloom fast-path + exact anti-join)
-        frontier_all = self.frontier.read(spark)
-        cands = discover_links(ext_ok, r, self.n_buckets).persist()
-        # per-bucket filter blobs stay in the seen table; candidates meet
-        # them bucket-co-partitioned inside probe_seen (no driver state,
-        # no full-blob broadcast)
-        seen_df = self.seen.read(spark) if self.round >= 0 else None
-        new = probe_seen(cands, frontier_all, seen_df, spark,
-                         contains_fn=self._filter.contains_many).persist()
+        # discover → dedupe (filter fast-path + exact anti-join).  Per-bucket
+        # filter blobs stay in the seen table; candidates meet them
+        # bucket-co-partitioned inside probe_seen (no driver state, no
+        # full-blob broadcast).  Both branches of drop_seen read the
+        # flagged frame, so it is persisted: the Python probe runs once.
+        flagged = probe_seen(discover_links(ext_ok, r, self.n_buckets),
+                             self.seen.read(spark),
+                             contains_fn=self._filter.contains_many).persist()
+        new = drop_seen(flagged, self.frontier.read(spark)).persist()
 
         # Independent jobs run concurrently from driver threads (Spark's
         # scheduler is thread-safe; the targets are distinct tables) —
         # a round's wall is the max of each wave, not the sum.
-        with ThreadPoolExecutor(max_workers=3) as pool:
+        with ThreadPoolExecutor(max_workers=2) as pool:
             wave1 = [pool.submit(self.fetchlog.append, flog, r),
                      pool.submit(self.frontier.append, new, r)]
             for f in wave1:
@@ -445,71 +440,55 @@ class CrawlEngine:
                              "url_hash", "left_anti")
                 .unionByName(new)
             )
-            counters = ("urls_selected", "urls_denied", "urls_fetched",
-                        "urls_extracted", "links_found", "links_new")
-
-            def collect_stats():
-                # one union-agg job instead of four separate collects
-                hb = F.col("host_bucket")
-                ext_j = ext_ok.join(selected.select("url_hash", "host_bucket"),
-                                   "url_hash")
-                u = (selected.select(hb, F.lit("sel").alias("t"),
-                                     F.lit(1).cast("long").alias("v"))
-                     .unionByName(denied.select(
-                         hb, F.lit("den").alias("t"),
-                         F.lit(1).cast("long").alias("v")))
-                     .unionByName(new.select(
-                         hb, F.lit("new").alias("t"),
-                         F.lit(1).cast("long").alias("v")))
-                     .unionByName(ext_j.select(
-                         hb, F.lit("ext").alias("t"),
-                         F.lit(1).cast("long").alias("v")))
-                     .unionByName(ext_j.select(
-                         hb, F.lit("lnk").alias("t"),
-                         F.col("n_links").cast("long").alias("v"))))
-                tagged = {"sel": "urls_selected", "den": "urls_denied",
-                          "ext": "urls_fetched", "lnk": "links_found",
-                          "new": "links_new"}
-                return u.groupBy("host_bucket").agg(
-                    *[F.sum(F.when(F.col("t") == tag, F.col("v"))
-                            .otherwise(0)).alias(col)
-                      for tag, col in tagged.items()]).collect()
-
             wave2 = [pool.submit(self.pending.replace, pending_next, r),
-                     pool.submit(self._update_blooms, new, r),
-                     pool.submit(collect_stats)]
-            wave2[0].result()
-            wave2[1].result()
-            agg_rows = wave2[2].result()
+                     pool.submit(self._update_blooms, new, r)]
+            for f in wave2:
+                f.result()
             tp = mark("pending_blooms_stats", tp)
 
+        # A19: per-bucket counters as one tagged-union aggregate, appended
+        # straight to the metrics table; the round totals ride that write
+        # via observe(), so the counters never round-trip through the driver
+        hb, one = F.col("host_bucket"), F.lit(1).cast("long")
+        ext_j = ext_ok.join(selected.select("url_hash", "host_bucket"),
+                            "url_hash")
+        tagged = (
+            selected.select(hb, F.lit("sel").alias("t"), one.alias("v"))
+            .unionByName(denied.select(hb, F.lit("den").alias("t"),
+                                       one.alias("v")))
+            .unionByName(new.select(hb, F.lit("new").alias("t"),
+                                    one.alias("v")))
+            .unionByName(ext_j.select(hb, F.lit("ext").alias("t"),
+                                      one.alias("v")))
+            .unionByName(ext_j.select(hb, F.lit("lnk").alias("t"),
+                                      F.col("n_links").cast("long")
+                                      .alias("v"))))
+        per_bucket = tagged.groupBy("host_bucket").agg(
+            *[F.sum(F.when(F.col("t") == tag, F.col("v")).otherwise(0))
+              .alias(col) for tag, col in (
+                  ("sel", "urls_selected"), ("den", "urls_denied"),
+                  ("ext", "urls_fetched"), ("lnk", "links_found"),
+                  ("new", "links_new"))])
+        counters = ("urls_selected", "urls_denied", "urls_fetched",
+                    "urls_extracted", "links_found", "links_new")
         wall_ms = int((time.time() - t0) * 1000)
-        per_bucket: Dict[int, Dict[str, int]] = {}
-        for row in agg_rows:
-            d = {c: int(row[c] or 0) for c in counters
-                 if c != "urls_extracted"}
-            d["urls_extracted"] = d["urls_fetched"]
-            per_bucket[int(row["host_bucket"])] = d
-        stats_rows = [
-            {"round": r, "partition_id": b, **d, "wall_ms": wall_ms}
-            for b, d in sorted(per_bucket.items())
-        ]
-        # NOTE: a coalesce(1) here measured 4s/commit (locality wait on
-        # the coalesced local relation) vs 0.45s for the plain write —
-        # the tiny-file count per round is bounded by the bucket count
-        self.metrics.append(
-            self.spark.createDataFrame(
-                [tuple(row[f.name] for f in METRICS.fields)
-                 for row in stats_rows], METRICS), r)
+        stats = per_bucket.select(
+            F.lit(r).alias("round"), hb.alias("partition_id"),
+            *[F.col("urls_fetched" if c == "urls_extracted" else c).alias(c)
+              for c in counters],
+            F.lit(wall_ms).cast("long").alias("wall_ms"))
+        obs = Observation()
+        self.metrics.append(stats.observe(
+            obs, *[F.sum(c).alias(c) for c in counters]), r)
+        summary = {c: int(obs.get[c] or 0) for c in counters}
         tp = mark("metrics", tp)
-        for df in (checked, selected, cands, new):
+        for df in (checked, selected, flagged, new):
             df.unpersist()
 
         if self.compact_every and r % self.compact_every == 0:
             self.frontier.compact(spark, r)
         self.round = r
         self._commit_checkpoint(r)
-        summary = {c: sum(row[c] for row in stats_rows) for c in counters}
         self._pending_count += (summary["links_new"] - summary["urls_selected"]
                                 - summary["urls_denied"])
         summary.update({"round": r, "wall_ms": int((time.time() - t0) * 1000),

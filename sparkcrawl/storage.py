@@ -22,9 +22,11 @@ import os
 import shutil
 import tempfile
 import time
+from functools import reduce
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -79,7 +81,6 @@ class IcebergishTable:
             # commit-rename storm dominates the round (measured 10-30s on
             # trivial data).  After repartition each bucket lands in one
             # task → ≤1 file per bucket per snapshot.
-            from pyspark.sql import functions as F
             df = df.repartition(F.col(self.partition_by))
             writer = df.write.mode("overwrite").partitionBy(self.partition_by)
         writer.parquet(data_dir)
@@ -158,7 +159,6 @@ class IcebergishTable:
         if not self.partition_by:
             raise ValueError("overwrite_partitions requires a partitioned table")
         from pyspark.sql import Observation
-        from pyspark.sql import functions as F
         # declared-partitions guard, folded into the write pass via
         # observe() (a separate count() was one extra full action per
         # commit).  NULL partition values are stray too: isin() is NULL
@@ -199,45 +199,15 @@ class IcebergishTable:
     def read(self, spark: SparkSession,
              snapshot_id: Optional[int] = None) -> DataFrame:
         """Scan the table as of a snapshot (default: current).  Partition
-        dirs (``host_bucket=N``) are discovered per data dir, preserving
-        partition pruning on that column.  Partition values overwritten
-        by a LATER snapshot are masked out of older dirs with a
-        partition-column filter (metadata-level delete: prunes those
-        dirs' partitions at planning, reads no masked row)."""
+        values overwritten by a LATER snapshot are masked out of older
+        dirs with a partition-column filter (metadata-level delete:
+        prunes those dirs' partitions at planning, reads no masked row)."""
         manifest = (self.current_manifest() if snapshot_id is None
                     else self.manifest_for(snapshot_id))
-        dirs: List[str] = [] if manifest is None else list(manifest["data_dirs"])
-        missing = [d for d in dirs if not os.path.isdir(d)]
-        if missing:
-            # a manifest referencing GC'd files is corruption, not "no
-            # rows" — silently skipping would mask wrongly-expired
-            # snapshots on the resume/time-travel path
-            raise FileNotFoundError(
-                f"{self.path}: manifest references missing data dirs "
-                f"{missing} — snapshot was GC'd or the table is corrupt")
-        if not dirs:
-            return spark.createDataFrame([], self.schema)
-        overwrites = {} if manifest is None else manifest.get("overwrites", {})
-        parts = []
-        for i, d in enumerate(dirs):
-            p = (spark.read.option("basePath", d).schema(self._read_schema())
-                 .parquet(d) if self.partition_by else
-                 spark.read.schema(self.schema).parquet(d))
-            # values overwritten by any LATER dir are dead in this one
-            masked = sorted({v for later in dirs[i + 1:]
-                             for v in overwrites.get(later, [])})
-            if masked:
-                from pyspark.sql import functions as F
-                p = p.filter(~F.col(self.partition_by).isin(masked))
-            parts.append(p)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
-
-    def _read_schema(self) -> T.StructType:
-        # partition column comes back from dir names; keep declared order
-        return self.schema
+        if manifest is None:
+            return self._scan(spark, [], {})
+        return self._scan(spark, manifest["data_dirs"],
+                          manifest.get("overwrites", {}))
 
     def read_new(self, spark: SparkSession, snapshot_id: int) -> DataFrame:
         """Scan ONLY the data dirs that snapshot *snapshot_id* added over
@@ -249,23 +219,38 @@ class IcebergishTable:
         if manifest.get("parent") is not None:
             parent_dirs = set(self.manifest_for(manifest["parent"])["data_dirs"])
         dirs = [d for d in manifest["data_dirs"] if d not in parent_dirs]
+        return self._scan(spark, dirs, {})
+
+    def _scan(self, spark: SparkSession, dirs: List[str],
+              overwrites: dict) -> DataFrame:
+        """Union of one scan per data dir.  Partition dirs
+        (``host_bucket=N``) are discovered per data dir, preserving
+        partition pruning on that column; the declared schema keeps the
+        column order.  Partition values that a LATER dir of ``dirs``
+        overwrites are masked out of the earlier ones."""
         missing = [d for d in dirs if not os.path.isdir(d)]
         if missing:
+            # a manifest referencing GC'd files is corruption, not "no
+            # rows" — silently skipping would mask wrongly-expired
+            # snapshots on the resume/time-travel path
             raise FileNotFoundError(
-                f"{self.path}: snapshot {snapshot_id} references missing "
-                f"data dirs {missing}")
+                f"{self.path}: manifest references missing data dirs "
+                f"{missing} — snapshot was GC'd or the table is corrupt")
         if not dirs:
             return spark.createDataFrame([], self.schema)
-        parts = [
-            spark.read.option("basePath", d).schema(self._read_schema())
-            .parquet(d) if self.partition_by else
-            spark.read.schema(self.schema).parquet(d)
-            for d in dirs
-        ]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+        parts = []
+        for i, d in enumerate(dirs):
+            reader = spark.read.schema(self.schema)
+            if self.partition_by:
+                reader = reader.option("basePath", d)
+            p = reader.parquet(d)
+            # values overwritten by any LATER dir are dead in this one
+            masked = sorted({v for later in dirs[i + 1:]
+                             for v in overwrites.get(later, [])})
+            if masked:
+                p = p.filter(~F.col(self.partition_by).isin(masked))
+            parts.append(p)
+        return reduce(DataFrame.unionByName, parts)
 
     def compact(self, spark: SparkSession, round_no: int) -> int:
         """Rewrite the current table contents as ONE snapshot (the Iceberg

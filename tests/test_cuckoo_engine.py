@@ -37,23 +37,26 @@ def test_cuckoo_backend_parity(spark, tmp_path):
 
 
 def test_cuckoo_overflow_degrades_not_dies(spark, tmp_path):
-    """With rebuild disabled, a bucket whose cuckoo filter saturates must
-    become a SATURATED marker (n_items = -1) routing its candidates
-    through the exact anti-join — NOT raise OverflowError mid-crawl.
-    Crawl results stay identical to the model oracle (filters are an
-    optimization)."""
+    """A bucket whose cuckoo filter saturates must become a SATURATED
+    marker (n_items = -1) routing its candidates through the exact
+    anti-join — NOT raise OverflowError mid-crawl.  The rebuild replaces
+    the marker within the same round, so the marker is looked for in the
+    earlier seen snapshots.  Crawl results stay identical to the model
+    oracle (filters are an optimization)."""
     eng = CrawlEngine(
         spark, str(tmp_path / "wd"),
         pages=corpus.pages_df(spark, N),
         robots=spark.createDataFrame(corpus.robots_rows(), ROBOTS),
         budget_per_host=BUDGET, n_buckets=2, salt_buckets=4,
-        seen_filter="cuckoo", rebuild_on_saturation=False,
+        seen_filter="cuckoo",
         bloom_capacity_per_bucket=8)  # ~32-slot filters: guaranteed overflow
     eng.init(corpus.seed_urls(N, 5))
     eng.run(ROUNDS, stop_when_idle=False)  # must not raise
 
-    seen_rows = eng.seen.read(spark).collect()
-    assert any(r["n_items"] < 0 for r in seen_rows), \
+    snapshots = range(eng.seen.current_snapshot_id() + 1)
+    assert any(r["n_items"] < 0
+               for sid in snapshots
+               for r in eng.seen.read(spark, snapshot_id=sid).collect()), \
         "expected at least one saturated bucket at capacity 8"
 
     model = model_crawler.crawl(
@@ -62,6 +65,31 @@ def test_cuckoo_overflow_degrades_not_dies(spark, tmp_path):
     eng_seen = {r["url_hash"] for r in
                 eng.frontier.read(spark).select("url_hash").collect()}
     assert eng_seen == set(model.frontier.keys())
+
+
+def test_saturated_bucket_takes_exact_path(spark):
+    """probe_seen on a SATURATED marker (n_items = -1, empty blob) flags
+    every candidate of that bucket maybe-seen, without touching the
+    filter, so drop_seen settles all of them with the exact anti-join:
+    frontier keys drop, new keys stay."""
+    from sparkcrawl.frontier import drop_seen, probe_seen, seeds_to_frontier
+    from sparkcrawl.schemas import SEEN_SET
+
+    urls = [corpus.page_url(i) for i in range(40)]
+    cands = seeds_to_frontier(spark, urls, 1)  # one bucket: 0
+    frontier = seeds_to_frontier(spark, urls[:20], 1)
+    seen = spark.createDataFrame(
+        [(0, 1, bytearray(), -1, 0.01)], SEEN_SET)
+
+    def no_filter(blob, hashes):
+        raise AssertionError("a saturated bucket has no filter to probe")
+
+    flagged = probe_seen(cands, seen, contains_fn=no_filter)
+    assert [r["maybe_seen"] for r in flagged.collect()] == [True] * 40
+    kept = {r["url_hash"] for r in drop_seen(flagged, frontier).collect()}
+    new = {r["url_hash"] for r in cands.collect()} - {
+        r["url_hash"] for r in frontier.collect()}
+    assert len(new) == 20 and kept == new
 
 
 def test_cuckoo_overflow_rebuilds_fast_path(spark, tmp_path):

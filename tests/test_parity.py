@@ -19,8 +19,13 @@ BUDGET = 4
 ROUNDS = 4
 
 
+COUNTERS = ("urls_selected", "urls_denied", "urls_fetched",
+            "urls_extracted", "links_found", "links_new")
+
+
 @pytest.fixture(scope="module")
-def engine(spark, tmp_path_factory):
+def crawl_run(spark, tmp_path_factory):
+    """The engine after ROUNDS rounds, and the summaries run() returned."""
     wd = str(tmp_path_factory.mktemp("crawl"))
     eng = CrawlEngine(
         spark, wd,
@@ -28,8 +33,12 @@ def engine(spark, tmp_path_factory):
         robots=spark.createDataFrame(corpus.robots_rows(), ROBOTS),
         budget_per_host=BUDGET, n_buckets=8, salt_buckets=4)
     eng.init(corpus.seed_urls(N, 6))
-    eng.run(ROUNDS, stop_when_idle=False)
-    return eng
+    return eng, eng.run(ROUNDS, stop_when_idle=False)
+
+
+@pytest.fixture(scope="module")
+def engine(crawl_run):
+    return crawl_run[0]
 
 
 @pytest.fixture(scope="module")
@@ -114,13 +123,29 @@ def test_heavy_host_is_actually_heavy():
     assert 0.4 < hosts.count(0) / len(hosts) < 0.6
 
 
+def _metrics_per_round(spark, engine):
+    return {r["round"]: r.asDict() for r in
+            engine.metrics.read(spark).groupBy("round").agg(
+                *[F.sum(c).alias(c) for c in COUNTERS]).collect()}
+
+
 def test_metrics_match_model(spark, engine, model):
-    eng = {r["round"]: r for r in
-           engine.metrics.read(spark).groupBy("round").agg(
-               *[F.sum(c).alias(c) for c in
-                 ("urls_selected", "urls_fetched", "links_found", "links_new")])
-           .collect()}
+    eng = _metrics_per_round(spark, engine)
     for rs in model.rounds:
         e = eng[rs["round"]]
-        for k in ("urls_selected", "urls_fetched", "links_found", "links_new"):
+        for k in ("urls_selected", "urls_fetched", "urls_extracted",
+                  "links_found", "links_new"):
             assert e[k] == rs[k], (rs["round"], k)
+        assert e["urls_denied"] == len(rs["denied_hashes"]), rs["round"]
+        assert e["urls_extracted"] == e["urls_fetched"], rs["round"]
+
+
+def test_round_summaries_match_metrics_table(spark, crawl_run):
+    """The summary counters run() returns (observed on the metrics
+    write) equal the metrics table's per-round sums."""
+    engine, summaries = crawl_run
+    eng = _metrics_per_round(spark, engine)
+    assert [s["round"] for s in summaries] == list(range(1, ROUNDS + 1))
+    for s in summaries:
+        assert {c: s[c] for c in COUNTERS} == {
+            c: eng[s["round"]][c] for c in COUNTERS}, s["round"]

@@ -95,11 +95,11 @@ def test_probe_seen_is_cogrouped_not_broadcast(spark):
     (round-1 design: ~12 GB broadcast at the 10^10-URL point)."""
     from pyspark.sql import types as T
 
-    from sparkcrawl.frontier import probe_seen
+    from sparkcrawl.frontier import drop_seen, probe_seen
     from sparkcrawl.schemas import SEEN_SET
     seeds = seeds_to_frontier(spark, [corpus.page_url(i) for i in range(20)], 8)
     seen = spark.createDataFrame([], SEEN_SET)
-    plan = plan_of(probe_seen(seeds, seeds, seen, spark))
+    plan = plan_of(drop_seen(probe_seen(seeds, seen), seeds))
     assert "FlatMapCoGroupsInPandas" in plan
     assert "Broadcast" not in plan.split("LeftAnti")[0]
 
