@@ -322,11 +322,6 @@ def page_rows_batch(ids: Sequence[int], n: int, fat: int = 0) -> List[Tuple]:
 
 # --- corpus materialization -------------------------------------------------
 
-def pages_rows(n: int, fat: int = 0) -> List[Tuple]:
-    """Driver-side full corpus (tiny/small scales only)."""
-    return page_rows_batch(range(n), n, fat)
-
-
 def pages_dict(n: int, fat: int = 0) -> Dict[str, bytes]:
     """url→html map — the model crawler's 'web'."""
     ids = range(n)

@@ -217,10 +217,6 @@ def resolve_links(base_url: str, hrefs: List[str]) -> List[str]:
 
 # --- vectorized UDF bodies (registered as pandas UDFs in frontier.py) -----
 
-def extract_text_series(html: pd.Series) -> pd.Series:
-    return html.map(extract_text)
-
-
 def husk_frame(url: pd.Series, html: pd.Series) -> pd.DataFrame:
     """Vectorized A11+A12+A14+A15: (url, html) → (text, links[])."""
     texts: List[str] = []

@@ -29,10 +29,6 @@ from .scope import session_cached
 
 # ---------------------------------------------------------------- helpers
 
-def _words_w():
-    return Window.partitionBy("doc_id").orderBy("i")
-
-
 def _words(docs: DataFrame) -> DataFrame:
     """(doc_id, i, w): whitespace tokens with 1-based position."""
     return docs.select(
